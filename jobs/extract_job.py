@@ -9,11 +9,11 @@
       --buckets 4096 --group-size 64
 
 At 10^12-document scale: buckets are the unit of resume (pick buckets >>
-executor count so stragglers rebalance), group-size bounds the work lost to
-a mid-run failure, and ocr-partitions sizes the media shuffle under
---media-join shuffle only (default 2x total cores via
-spark.sparkContext.defaultParallelism; the default broadcast_meta path
-never shuffles image bytes and takes no partition count).
+executor count so stragglers rebalance), and group-size bounds both the
+work lost to a mid-run failure and the span metadata each group
+broadcasts onto its media slice. Image bytes never shuffle: OCR runs on
+the media table's own parquet splits, so there is no partition count to
+tune.
 """
 
 from __future__ import annotations
@@ -32,20 +32,6 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=4096)
     p.add_argument("--group-size", type=int, default=64)
     p.add_argument("--model-dir", default=None)
-    p.add_argument(
-        "--ocr-partitions", type=int, default=None,
-        help="sizes the salted media repartition; ONLY applies with "
-        "--media-join shuffle (the default broadcast_meta path runs OCR on "
-        "the media table's natural parquet splits and ignores this). "
-        "Default under shuffle: 2x total cores.",
-    )
-    p.add_argument(
-        "--media-join", choices=("shuffle", "broadcast_meta"),
-        default="broadcast_meta",
-        help="broadcast_meta (default): span metadata broadcasts onto each "
-        "bucket's media slice, image bytes never shuffle; shuffle adds a "
-        "salted repartition before OCR for size-skewed bucket splits",
-    )
     args = p.parse_args()
 
     from newocr_spark.artifacts import get_model
@@ -57,15 +43,9 @@ def main() -> None:
     model = (
         FontModel.load(args.model_dir) if args.model_dir else get_model()
     )
-    ocr_parts = None
-    if args.media_join == "shuffle":
-        ocr_parts = args.ocr_partitions or spark.sparkContext.defaultParallelism * 2
-    elif args.ocr_partitions:
-        p.error("--ocr-partitions requires --media-join shuffle")
     runner = ExtractRunner(
         spark, model, args.output, StateTable(spark, args.state),
         n_buckets=args.buckets, group_size=args.group_size,
-        ocr_partitions=ocr_parts, media_join=args.media_join,
     )
     docs = spark.read.parquet(args.documents)
     media = spark.read.parquet(args.media)

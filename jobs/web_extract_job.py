@@ -37,10 +37,6 @@ def main() -> None:
     p.add_argument("--buckets", type=int, default=4096)
     p.add_argument("--group-size", type=int, default=64)
     p.add_argument("--model-dir", default=None)
-    p.add_argument(
-        "--media-join", choices=("shuffle", "broadcast_meta"),
-        default="broadcast_meta",
-    )
     args = p.parse_args()
 
     from newocr_spark.artifacts import get_model
@@ -57,7 +53,6 @@ def main() -> None:
     runner = ExtractRunner(
         spark, model, args.output, StateTable(spark, args.state),
         n_buckets=args.buckets, group_size=args.group_size,
-        media_join=args.media_join,
     )
     stats = runner.run(docs, media, input_snapshot=args.snapshot, run_id=args.run_id)
     print(stats)

@@ -79,6 +79,20 @@ def _tokens(col):
     return F.split(F.trim(col), r"\s+")
 
 
+def _shingle_windows(toks, n: int):
+    """n-token shingles of a projected token-array column, as an
+    array<string>: `transform(sequence(0, size-n), i -> slice(toks, i+1, n))`
+    — empty for docs with fewer than n tokens. Shared by the batch
+    (_shingles) and streaming (pipeline/streaming.py) dedup paths."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def _shingles(df: DataFrame, n: int = 2) -> DataFrame:
     """doc_id → distinct n-gram token shingles.
 
@@ -96,17 +110,9 @@ def _shingles(df: DataFrame, n: int = 2) -> DataFrame:
     slice re-ran the regex split — O(tokens^2) regex work per doc (measured
     5x on the shingle stage)."""
     toked = df.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
-    windows = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        toked.select("doc_id", F.explode(windows).alias("shingle")).distinct()
-    )
+    return toked.select(
+        "doc_id", F.explode(_shingle_windows(F.col("toks"), n)).alias("shingle")
+    ).distinct()
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:

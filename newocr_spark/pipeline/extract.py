@@ -1,33 +1,35 @@
-"""The flagship extraction job (SURVEY §3.1, Spark-native re-expression).
+"""The flagship extraction plan (SURVEY §3.1, Spark-native re-expression).
 
-    documents ──explode──▶ spans ──┬─ kind='text' ───────────────────────┐
-                                   └─ kind='media' ─ join(media) ─ salt ─┤
-                                        └ mapInPandas(OCR kernel) ───────┤
-                                                                         ▼
-                    unionByName ─ row_number per doc ─▶ extracted spans
-                    (groupBy(doc_id) + sort_array(collect_list(...)) for
-                     the assembled-document variant)
+    documents ─explode─▶ spans ─┬─ kind='text' ─────────────────────────────┐
+                                └─ media meta ─┬─ broadcast ⋈ media ─ OCR ──┤
+                                               └─ anti-join media → error ──┤
+                                                                            ▼
+                       unionByName ─ row_number per doc ─▶ extracted spans
+
+This module owns the plan as small builders (explode_spans,
+text_span_rows, media_meta, ocr_media, missing_media_rows, number_spans).
+``extract_spans`` composes them over one slice; pipeline/state.ExtractRunner
+composes the same builders per bucket group plus its sinks and state.
 
 Physical design (SURVEY §4, "needs explicit engineering"):
   * the font model ships as ONE sc.broadcast of numpy arrays — the NN loop
     is numpy inside the Arrow UDF, zero per-lookup IO (vs the reference's
     per-character DB futures, OCRScan.java:209, OCRDatabaseManager.java:234-302);
-  * media work is repartitioned on xxhash64(media_ref) so one document's
-    many images and any size-skewed hot keys spread across the cluster
-    (the salted-repartition requirement of the north rule); AQE skew-join
-    handles the residual;
+  * the small (doc_id, offset, media_ref) span metadata is broadcast onto
+    the media table, so image bytes never shuffle and OCR runs on the media
+    table's own size-balanced parquet splits; missing media is found by a
+    metadata-only anti-join;
   * everything before/after the UDF is plain DataFrame ops — Catalyst
-    pushes the kind filter and column pruning into the parquet scan and
-    picks broadcast-hash for the small media dim automatically.
+    pushes the kind filter and column pruning into the parquet scan.
 
-At 100 TB: the documents scan is columnar with only (doc_id, spans) read;
-the only wide shuffles are the media repartition (sized by
-ocr_partitions) and the final per-doc assembly, both keyed on high-
-cardinality ids — no skewed groupBy keys.
+At 100 TB: the documents scan is columnar with only (doc_id, spans) read,
+and the one wide shuffle is the per-doc seq window, keyed on the
+high-cardinality doc_id.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import pandas as pd
@@ -39,6 +41,10 @@ from ..model import FontModel
 OCR_OUTPUT_SCHEMA = (
     "doc_id string, offset int, kind string, text string, media_ref string, "
     "glyph_count long, line_count int, font_size_pt double, error string"
+)
+SPAN_COLUMNS = (
+    "doc_id", "seq", "kind", "text", "media_ref", "offset",
+    "glyph_count", "line_count", "font_size_pt", "error",
 )
 
 
@@ -64,7 +70,7 @@ def make_ocr_udf(broadcast_model):
             errors: list = [None] * n
             for i, png in enumerate(pdf["png"]):
                 try:
-                    if png is None:
+                    if png is None:  # a media row whose bytes are NULL
                         raise ValueError("missing media bytes")
                     lines = scan_grid(binarize(decode_image(png)), model)
                     texts[i] = render_text(lines)
@@ -95,81 +101,81 @@ def make_ocr_udf(broadcast_model):
     return ocr_batches
 
 
-def extract_spans(
-    spark: SparkSession,
-    documents: DataFrame,
-    media: DataFrame,
-    model: FontModel,
-    ocr_partitions: int | None = None,
-    media_join: str = "broadcast_meta",
-) -> DataFrame:
-    """documents (doc_id, spans) + media (media_ref, png) → extracted spans
-    (doc_id, seq, kind, text, media_ref, offset, glyph_count, error).
-
-    media_join picks the physical strategy for attaching image bytes:
-
-    * ``broadcast_meta`` (default): broadcast the tiny (doc_id, offset,
-      media_ref) span-metadata side onto the media table, so the IMAGE
-      BYTES NEVER SHUFFLE — OCR runs on media's natural size-balanced
-      partitioning (parquet splits are bounded by maxPartitionBytes, so
-      per-task byte volume is already even). Missing media is detected by
-      a metadata-only anti-join (no bytes move) and surfaces as the same
-      error rows the shuffle path produces. Right whenever the media-span
-      metadata of the processed slice fits the broadcast budget — true for
-      per-bucket-group processing (pipeline/state.py) at any corpus size.
-    * ``shuffle``: spans-side left join + explicit salted repartition on
-      xxhash64(media_ref). The unbounded-slice fallback; also the shape a
-      bucketed/co-located table layout turns into a zero-exchange SMJ.
-    """
-    bmodel = spark.sparkContext.broadcast(model)
-
-    spans = documents.select(
+def explode_spans(documents: DataFrame) -> DataFrame:
+    """documents (doc_id, spans) → one row per span:
+    (doc_id, kind, text, media_ref, offset)."""
+    return documents.select(
         "doc_id", F.explode("spans").alias("span")
     ).select("doc_id", "span.kind", "span.text", "span.media_ref", "span.offset")
 
-    text_spans = (
-        spans.filter(F.col("kind") == "text")
-        .select(
-            "doc_id", "offset", F.lit("text").alias("kind"), "text",
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("long").alias("glyph_count"),
-            F.lit(0).cast("int").alias("line_count"),
-            F.lit(None).cast("double").alias("font_size_pt"),
-            F.lit(None).cast("string").alias("error"),
-        )
+
+def text_span_rows(spans: DataFrame) -> DataFrame:
+    """Text spans pass through as OCR_OUTPUT_SCHEMA rows with zero metrics."""
+    return spans.filter(F.col("kind") == "text").select(
+        "doc_id", "offset", F.lit("text").alias("kind"), "text",
+        F.lit(None).cast("string").alias("media_ref"),
+        F.lit(0).cast("long").alias("glyph_count"),
+        F.lit(0).cast("int").alias("line_count"),
+        F.lit(None).cast("double").alias("font_size_pt"),
+        F.lit(None).cast("string").alias("error"),
     )
 
-    meta = spans.filter(F.col("kind") == "media").select(
-        "doc_id", "offset", "media_ref"
+
+def media_meta(spans: DataFrame) -> DataFrame:
+    """(doc_id, offset, media_ref) of the media spans — the side that is
+    broadcast onto the image bytes."""
+    return spans.filter(F.col("kind") == "media").select("doc_id", "offset", "media_ref")
+
+
+def ocr_media(media: DataFrame, meta: DataFrame, broadcast_model) -> DataFrame:
+    """OCR of a media slice: inner join onto the broadcast span metadata,
+    so the image bytes never shuffle and OCR runs on the slice's own
+    partitioning; media_refs no span references drop out here."""
+    return (
+        media.select("media_ref", "png")
+        .join(F.broadcast(meta), "media_ref", "inner")
+        .select("doc_id", "offset", "media_ref", "png")
+        .mapInPandas(make_ocr_udf(broadcast_model), OCR_OUTPUT_SCHEMA)
     )
-    if media_join == "broadcast_meta":
-        # bytes stay put: inner-join media → broadcast(meta); missing media
-        # recovered via metadata-only anti-join (null png → error row)
-        with_png = media.select("media_ref", "png").join(
-            F.broadcast(meta), "media_ref", "inner"
-        ).select("doc_id", "offset", "media_ref", "png")
-        missing = meta.join(
-            media.select("media_ref"), "media_ref", "left_anti"
-        ).select(
-            "doc_id", "offset", "media_ref", F.lit(None).cast("binary").alias("png")
-        )
-        media_spans = with_png.unionByName(missing)
-    else:
-        media_spans = meta.join(media.select("media_ref", "png"), "media_ref", "left")
-        if ocr_partitions:
-            # spread size skew: hash the (unique) media_ref, never doc_id alone
-            media_spans = media_spans.repartition(
-                ocr_partitions, F.xxhash64("media_ref")
-            )
 
-    ocr_spans = media_spans.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
 
-    result = text_spans.unionByName(ocr_spans)
+def missing_media_rows(meta: DataFrame, media: DataFrame) -> DataFrame:
+    """Media spans whose media_ref has no media row, as error rows: a
+    metadata-only anti-join, so no image bytes move."""
+    return meta.join(media.select("media_ref"), "media_ref", "left_anti").select(
+        "doc_id", "offset", F.lit("text").alias("kind"),
+        F.lit(None).cast("string").alias("text"), "media_ref",
+        F.lit(0).cast("long").alias("glyph_count"),
+        F.lit(0).cast("int").alias("line_count"),
+        F.lit(None).cast("double").alias("font_size_pt"),
+        F.lit("ValueError: missing media bytes").alias("error"),
+    )
+
+
+def number_spans(*parts: DataFrame) -> DataFrame:
+    """Union OCR_OUTPUT_SCHEMA row sets and number each doc's spans by
+    offset (seq, from 0) → the extracted-spans shape."""
+    rows = functools.reduce(DataFrame.unionByName, parts)
     seq = Window.partitionBy("doc_id").orderBy("offset")
-    return result.withColumn("seq", (F.row_number().over(seq) - 1).cast("int")).select(
-        "doc_id", "seq", "kind", "text", "media_ref", "offset",
-        "glyph_count", "line_count", "font_size_pt", "error",
+    return rows.withColumn("seq", (F.row_number().over(seq) - 1).cast("int")).select(
+        *SPAN_COLUMNS
     )
+
+
+def extract_spans(
+    spark: SparkSession, documents: DataFrame, media: DataFrame, model: FontModel
+) -> DataFrame:
+    """documents (doc_id, spans) + media (media_ref, png) → extracted spans
+    (SPAN_COLUMNS) in one plan.
+
+    For one bounded slice: its media-span metadata is broadcast whole, so
+    it must fit the broadcast budget. Corpora beyond that go through
+    pipeline/state.ExtractRunner, whose bucket groups bound each
+    broadcast and make the job resumable."""
+    spans = explode_spans(documents)
+    meta = media_meta(spans)
+    ocr = ocr_media(media, meta, spark.sparkContext.broadcast(model))
+    return number_spans(text_span_rows(spans), ocr, missing_media_rows(meta, media))
 
 
 def assemble_documents(extracted: DataFrame) -> DataFrame:

@@ -40,6 +40,9 @@ from abc import ABC, abstractmethod
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# One row per committed bucket. wall_ms is the bucket GROUP's wall time,
+# stored once on the group's first bucket row and 0 on the others, so
+# sum(wall_ms) over a run is the time its groups took.
 STATE_SCHEMA = (
     "run_id string, partition_id int, doc_id_min string, doc_id_max string, "
     "input_snapshot string, docs_done long, glyph_count long, error_count long, "
@@ -120,9 +123,17 @@ class ParquetStateStore(StateStore):
         self.path = path
 
     def read(self) -> DataFrame:
+        """The log, or an empty frame when the path does not exist or holds
+        no data files yet. Anything else (a corrupt or unreadable log)
+        raises: reading it as "no buckets done" would silently re-run the
+        whole job and reset ``attempt``."""
+        from pyspark.errors import AnalysisException
+
         try:
             return self.spark.read.parquet(self.path)
-        except Exception:
+        except AnalysisException as exc:
+            if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             return self.spark.createDataFrame([], STATE_SCHEMA)
 
     def append(self, rows: list[dict]) -> None:

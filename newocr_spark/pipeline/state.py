@@ -20,7 +20,7 @@ keyed on the media table itself:
     (never by re-executing the OCR plan);
   * after a group commits, one state row per bucket is appended with
     lineage (input snapshot, doc-id range) and metrics (docs, glyphs,
-    errors, wall ms, attempt);
+    errors, attempt, and the group's wall ms on its first bucket row);
   * resume = read the state table, skip buckets already committed for the
     same input snapshot; everything else is recomputed;
   * once all buckets are committed, the CHEAP assembly stage (text spans
@@ -39,6 +39,7 @@ guarantee.
 
 from __future__ import annotations
 
+import datetime
 import time
 from dataclasses import dataclass
 
@@ -46,7 +47,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import FontModel
-from .sinks import STATE_SCHEMA, ParquetSpanSink, ParquetStateStore, SpanSink, StateStore
+from .extract import (
+    OCR_OUTPUT_SCHEMA,
+    explode_spans,
+    media_meta,
+    missing_media_rows,
+    number_spans,
+    ocr_media,
+    text_span_rows,
+)
+from .sinks import ParquetSpanSink, ParquetStateStore, SpanSink, StateStore
 
 
 class StateTable(ParquetStateStore):
@@ -55,7 +65,9 @@ class StateTable(ParquetStateStore):
 
 @dataclass
 class ExtractRunner:
-    """Bucketed, resumable driver for the extraction job."""
+    """Bucketed, resumable driver for the extraction job. The span plan
+    itself is pipeline/extract's builders; the runner owns only the bucket
+    groups, the sinks, the state commits and the crash hook."""
 
     spark: SparkSession
     model: FontModel
@@ -63,12 +75,6 @@ class ExtractRunner:
     state: StateStore
     n_buckets: int = 16
     group_size: int = 4
-    ocr_partitions: int | None = None
-    # the runner always broadcasts the span metadata onto the bucket's
-    # media slice (image bytes never shuffle); "shuffle" additionally
-    # salt-repartitions the joined rows before OCR — useful when a
-    # bucket's natural file splits are size-skewed
-    media_join: str = "broadcast_meta"
     # test hook: raise after committing this many groups (simulated crash)
     fail_after_groups: int | None = None
     # sink seam: default parquet sinks derive from output_path; pass
@@ -97,25 +103,9 @@ class ExtractRunner:
         return f"{input_snapshot}#b{self.n_buckets}"
 
     def _read_intermediate(self) -> DataFrame:
-        from .extract import OCR_OUTPUT_SCHEMA
-
         return self.ocr_sink.read(OCR_OUTPUT_SCHEMA + ", snapshot string, bucket int")
 
     def run(self, documents: DataFrame, media: DataFrame, input_snapshot: str, run_id: str) -> dict:
-        from pyspark.sql import Window
-
-        from .extract import OCR_OUTPUT_SCHEMA, make_ocr_udf
-
-        spark = self.spark
-        if self.ocr_partitions and self.media_join != "shuffle":
-            import warnings
-
-            warnings.warn(
-                "ocr_partitions only applies with media_join='shuffle'; the "
-                "default broadcast_meta path runs OCR on the media table's "
-                "natural parquet splits",
-                stacklevel=2,
-            )
         snap = self.snapshot_key(input_snapshot)
         done = self.state.completed_buckets(snap)
         attempt = self.state.attempts(snap) + 1
@@ -125,16 +115,10 @@ class ExtractRunner:
             for i in range(0, len(todo), self.group_size)
         ]
 
-        spans = documents.select(
-            "doc_id", F.explode("spans").alias("span")
-        ).select("doc_id", "span.kind", "span.text", "span.media_ref", "span.offset")
-        meta = spans.filter(F.col("kind") == "media").select(
-            "doc_id", "offset", "media_ref"
-        )
-        media_b = media.select("media_ref", "png").withColumn(
-            "bucket", self._bucket_of("media_ref")
-        )
-        bmodel = spark.sparkContext.broadcast(self.model)
+        spans = explode_spans(documents)
+        meta = media_meta(spans)
+        media_b = media.withColumn("bucket", self._bucket_of("media_ref"))
+        bmodel = self.spark.sparkContext.broadcast(self.model)
 
         committed = 0
         stats = {"groups_run": 0, "buckets_done": len(done)}
@@ -143,15 +127,8 @@ class ExtractRunner:
             # media-keyed bucket filter: only this group's image bytes are
             # read (a partition-pruned scan when media is stored bucketed)
             part = media_b.filter(F.col("bucket").isin(group))
-            with_png = part.join(F.broadcast(meta), "media_ref", "inner").select(
-                "doc_id", "offset", "media_ref", "png"
-            )
-            if self.ocr_partitions and self.media_join == "shuffle":
-                with_png = with_png.repartition(
-                    self.ocr_partitions, F.xxhash64("media_ref")
-                )
             ocr = (
-                with_png.mapInPandas(make_ocr_udf(bmodel), OCR_OUTPUT_SCHEMA)
+                ocr_media(part, meta, bmodel)
                 .withColumn("bucket", self._bucket_of("media_ref"))
                 .withColumn("snapshot", F.lit(snap))
             )
@@ -179,8 +156,6 @@ class ExtractRunner:
                 .collect()
             )
             by_bucket = {r.bucket: r for r in metrics}
-            import datetime
-
             now = datetime.datetime.now(datetime.timezone.utc)
             self.state.append(
                 [
@@ -193,7 +168,8 @@ class ExtractRunner:
                         "docs_done": int(by_bucket[b].docs_done) if b in by_bucket else 0,
                         "glyph_count": int(by_bucket[b].glyph_count) if b in by_bucket else 0,
                         "error_count": int(by_bucket[b].error_count) if b in by_bucket else 0,
-                        "wall_ms": wall_ms,
+                        # the group's wall time, once: on its first bucket
+                        "wall_ms": wall_ms if b == group[0] else 0,
                         "attempt": attempt,
                         "committed_at": now,
                     }
@@ -209,40 +185,16 @@ class ExtractRunner:
                 )
 
         # ---- assembly stage (cheap, idempotent): runs once all buckets are
-        # committed — text spans pass through, missing media become error
-        # rows (metadata-only anti-join), per-doc seq numbering
+        # committed — the same text / missing-media / seq builders as
+        # extract_spans, over the committed OCR rows of this snapshot
         if stats["buckets_done"] >= self.n_buckets:
-            text_spans = (
-                spans.filter(F.col("kind") == "text")
-                .select(
-                    "doc_id", "offset", F.lit("text").alias("kind"), "text",
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(0).cast("long").alias("glyph_count"),
-                    F.lit(0).cast("int").alias("line_count"),
-                    F.lit(None).cast("double").alias("font_size_pt"),
-                    F.lit(None).cast("string").alias("error"),
-                )
-            )
             ocr_all = (
                 self._read_intermediate()
                 .filter(F.col("snapshot") == snap)  # never prior-snapshot rows
                 .drop("bucket", "snapshot")
             )
-            missing = (
-                meta.join(media.select("media_ref"), "media_ref", "left_anti")
-                .select(
-                    "doc_id", "offset", F.lit("text").alias("kind"),
-                    F.lit(None).cast("string").alias("text"), "media_ref",
-                    F.lit(0).cast("long").alias("glyph_count"),
-                    F.lit(0).cast("int").alias("line_count"),
-                    F.lit(None).cast("double").alias("font_size_pt"),
-                    F.lit("ValueError: missing media bytes").alias("error"),
-                )
-            )
-            result = text_spans.unionByName(ocr_all).unionByName(missing)
-            seq = Window.partitionBy("doc_id").orderBy("offset")
-            final = result.withColumn(
-                "seq", (F.row_number().over(seq) - 1).cast("int")
+            final = number_spans(
+                text_span_rows(spans), ocr_all, missing_media_rows(meta, media)
             ).withColumn("bucket", self._bucket_of("doc_id"))
             # FULL overwrite: the assembly is the one stage allowed to
             # rewrite everything — a dynamic/partition overwrite of a

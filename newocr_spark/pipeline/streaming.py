@@ -67,7 +67,6 @@ def stream_extract(
     output_path: str,
     checkpoint_path: str,
     schema=None,
-    ocr_partitions: int | None = None,
     trigger_once: bool = True,
 ):
     """Start a streaming query: new document parquet files → extracted spans.
@@ -81,9 +80,7 @@ def stream_extract(
     stream = spark.readStream.schema(schema).parquet(documents_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extracted = extract_spans(
-            spark, batch_df, media, model, ocr_partitions=ocr_partitions
-        )
+        extracted = extract_spans(spark, batch_df, media, model)
         _idempotent_append(extracted, output_path, batch_id)
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
@@ -359,7 +356,7 @@ def stream_dedup_neardup(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..analytics.dedup import N_BANDS, N_MINHASH
+    from ..analytics.dedup import N_BANDS, N_MINHASH, _h60, _shingle_windows, _tokens
 
     if schema is None:
         schema = spark.read.parquet(documents_path).schema
@@ -374,33 +371,18 @@ def stream_dedup_neardup(
         .filter(f"{ts_col} IS NOT NULL")
     )
 
-    # narrow per-row shingling (dedup._shingles semantics, sans distinct —
-    # min over a multiset equals min over its set). Project toks/shingles
-    # into columns first: referencing the split() expression inside the
-    # lambda defeats CSE across the lambda boundary (see dedup.py:93-97).
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    shingled = stream.withColumn("toks", toks).withColumn(
-        "shingles",
-        F.when(
-            F.size("toks") >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - n),
-                lambda i: F.array_join(F.slice(F.col("toks"), i + 1, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
+    # narrow per-row shingling: dedup._shingles' window, sans distinct —
+    # min over a multiset equals min over its set
+    shingled = stream.withColumn("toks", _tokens(F.col("text"))).withColumn(
+        "shingles", _shingle_windows(F.col("toks"), n)
     )
 
     def _mh(i: int):
-        # salted 60-bit hash, min over shingles — dedup._h60 inlined so the
-        # whole signature stays in one whole-stage-codegen projection
+        # salted minhash, as dedup._signatures_from, kept in one projection
         return F.array_min(
             F.transform(
                 F.col("shingles"),
-                lambda s: F.conv(
-                    F.substring(F.md5(F.concat_ws(":", F.lit(str(i)), s)), 1, 15),
-                    16,
-                    10,
-                ).cast("long"),
+                lambda s: _h60(F.concat_ws(":", F.lit(str(i)), s)),
             )
         )
 

@@ -2,6 +2,9 @@
 (BASELINE.json per-row invariant: (kind, text, media_ref, order) per doc),
 plus checkpoint/resume (no dup/loss after a simulated crash)."""
 
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -30,7 +33,7 @@ def test_extract_matches_golden(spark, font_model, fixture_dir):
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
 
-    extracted = extract_spans(spark, docs, media, font_model, ocr_partitions=8)
+    extracted = extract_spans(spark, docs, media, font_model)
     got = _spans_by_doc(extracted)
     exp = _spans_by_doc(golden)
     assert got == exp  # exact span-sequence equality, every doc
@@ -170,12 +173,54 @@ def test_bucket_count_change_is_isolated(spark, font_model, fixture_dir, tmp_pat
     assert _spans_by_doc(r4.read_output()) == _spans_by_doc(golden)
 
 
-@pytest.mark.parametrize("strategy", ["broadcast_meta", "shuffle"])
-def test_missing_media_error_rows(spark, font_model, fixture_dir, strategy):
+def test_state_wall_ms_counts_each_group_once(spark, font_model, fixture_dir, tmp_path):
+    """A group's wall time is stored once, on its first bucket row, so the
+    state table's sum(wall_ms) cannot exceed the run's own wall time."""
+    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+
+    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    state = StateTable(spark, str(tmp_path / "state"))
+    runner = ExtractRunner(
+        spark, font_model, str(tmp_path / "out"), state, n_buckets=8, group_size=4
+    )
+    t0 = time.time()
+    runner.run(docs, media, input_snapshot="s", run_id="r1")
+    run_ms = (time.time() - t0) * 1000
+
+    rows = state.read().collect()
+    assert 0 < sum(r.wall_ms for r in rows) <= run_ms
+    assert all(r.wall_ms == 0 for r in rows if r.partition_id % 4)
+
+
+def test_corrupt_state_log_raises(spark, font_model, fixture_dir, tmp_path):
+    """An unreadable state log must fail the run, not read as "no buckets
+    done" (which would silently re-run everything and reset attempt)."""
+    from newocr_spark.pipeline.state import ExtractRunner, StateTable
+
+    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
+    media = spark.read.parquet(f"{fixture_dir}/media.parquet")
+    state_dir = tmp_path / "state"
+    state_dir.mkdir()
+    (state_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    out = str(tmp_path / "out")
+    runner = ExtractRunner(
+        spark, font_model, out, StateTable(spark, str(state_dir)),
+        n_buckets=4, group_size=2,
+    )
+    with pytest.raises(Exception, match="(?i)parquet"):
+        runner.run(docs, media, input_snapshot="s", run_id="r1")
+    assert not os.path.exists(out + "_ocr")  # no group wrote output
+    assert not os.path.exists(out)
+
+
+@pytest.mark.parametrize("entry", ["extract_spans", "ExtractRunner"])
+def test_missing_media_error_rows(spark, font_model, fixture_dir, tmp_path, entry):
     """A media span whose media_ref has no media row must surface as an
-    error row (never silently vanish) — identically in both join
-    strategies."""
+    error row (never silently vanish) — identically through both entry
+    points, which share one missing-media builder."""
     from newocr_spark.pipeline.extract import extract_spans
+    from newocr_spark.pipeline.state import ExtractRunner, StateTable
 
     docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
     media = spark.read.parquet(f"{fixture_dir}/media.parquet")
@@ -183,9 +228,15 @@ def test_missing_media_error_rows(spark, font_model, fixture_dir, strategy):
     victim = media.select("media_ref").first().media_ref
     pruned = media.filter(F.col("media_ref") != victim)
 
-    extracted = extract_spans(
-        spark, docs, pruned, font_model, ocr_partitions=8, media_join=strategy
-    )
+    if entry == "extract_spans":
+        extracted = extract_spans(spark, docs, pruned, font_model)
+    else:
+        runner = ExtractRunner(
+            spark, font_model, str(tmp_path / "out"),
+            StateTable(spark, str(tmp_path / "state")), n_buckets=4, group_size=2,
+        )
+        runner.run(docs, pruned, input_snapshot="s", run_id="r1")
+        extracted = runner.read_output()
     errs = extracted.filter(F.col("error").isNotNull()).collect()
     assert [e.media_ref for e in errs] == [victim]
     assert "missing media bytes" in errs[0].error
@@ -193,18 +244,6 @@ def test_missing_media_error_rows(spark, font_model, fixture_dir, strategy):
     total = extracted.count()
     golden = spark.read.parquet(f"{fixture_dir}/golden_spans.parquet")
     assert total == golden.count()
-
-
-def test_join_strategies_agree(spark, font_model, fixture_dir):
-    """broadcast_meta and shuffle produce identical span sequences."""
-    from newocr_spark.pipeline.extract import extract_spans
-
-    docs = spark.read.parquet(f"{fixture_dir}/documents.parquet")
-    media = spark.read.parquet(f"{fixture_dir}/media.parquet")
-    a = extract_spans(spark, docs, media, font_model, media_join="broadcast_meta")
-    b = extract_spans(spark, docs, media, font_model, ocr_partitions=8,
-                      media_join="shuffle")
-    assert _spans_by_doc(a) == _spans_by_doc(b)
 
 
 @pytest.mark.parametrize("fmt", ["json", "csv"])
