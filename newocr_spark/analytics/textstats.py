@@ -22,6 +22,18 @@ STOPWORDS = {
 }
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Small-file artifact guard: a compute-heavy narrow op over a source
+    with fewer splits than half the cluster runs on a handful of cores (a
+    single-row-group parquet file is ONE task, whatever the cluster size).
+    Spread it; a real crawl/embedding store arrives pre-split, making this
+    a no-op there."""
+    sc = df.sparkSession.sparkContext
+    if df.rdd.getNumPartitions() * 2 < sc.defaultParallelism:
+        return df.repartition(sc.defaultParallelism)
+    return df
+
+
 def _tokens(col):
     return F.split(F.trim(col), r"\s+")
 
@@ -726,8 +738,6 @@ def repetition_stats(
     width (fewer than n tokens) report zero fractions. Measured at
     sf0.1 local[32]: 8.0s (string grams, split tok/bigram pipelines) →
     2.3s warm."""
-    from newocr_spark.analytics.similarity import _spread
-
     # small-file artifact guard: the explode below is the compute-heavy
     # stage; a single-row-group parquet source would run it as ONE task
     # regardless of cluster size
@@ -943,8 +953,6 @@ def _hashed_windows(docs: DataFrame, window: int):
     in-codegen to xxhash64 of the sliced token array, so only 8-byte longs
     ever ride the downstream exchanges (same equality-class compression
     and ~1e-9 collision caveat as repetition_stats)."""
-    from newocr_spark.analytics.similarity import _spread
-
     toked = _spread(docs).select(
         "doc_id", "text", _tokens(F.col("text")).alias("toks")
     ).localCheckpoint(eager=False)

@@ -89,88 +89,6 @@ def corpus_fixture_tables(
     return docs, media
 
 
-def _char_geometry_values() -> str:
-    """SQL VALUES list (ch, w, blk) for every SparkGrid glyph: design-scale
-    width and black-pixel count. Derived from the same GLYPHS table the
-    renderer uses, so the oracle can compute exact image geometry."""
-    from .font.glyphs import GLYPHS
-
-    rows = []
-    for ch in sorted(GLYPHS):
-        g = GLYPHS[ch]
-        lit = ch.replace("'", "''")
-        rows.append(f"('{lit}', {g.shape[1]}, {int(g.sum())})")
-    return ", ".join(rows)
-
-
-def media_metadata_sql(max_docs: int = 40) -> str:
-    """DuckDB oracle for image_metadata over corpus_fixture_tables media.
-
-    The fixture render is a pure function of (text, doc_id % 2): one line,
-    scale s = 1 + doc_id % 2, height (CELL_HEIGHT+2)*s, width
-    (line_w + MARGIN_LEFT + 1)*s where line_w walks the text exactly as
-    render_line does (space -> space_width+tracking; glyph -> width, plus
-    tracking when the previous char exists and is not a space). Black
-    pixels come only from glyphs, scaled by s^2; the image is pure 0/255 so
-    mean_luma = 255*(1 - black_ratio)."""
-    from .font.glyphs import (
-        CELL_HEIGHT, MARGIN_LEFT, SPACE_WIDTH, TRACKING,
-    )
-
-    space_w = SPACE_WIDTH + TRACKING
-    return f"""
-    WITH docs AS (
-      SELECT doc_id, text, 1 + doc_id % 2 AS s
-      FROM documents WHERE doc_id < {max_docs}
-    ),
-    chars AS (
-      SELECT doc_id, c.ch, c.pos,
-             lag(c.ch) OVER (PARTITION BY doc_id ORDER BY c.pos) AS prev
-      FROM docs, LATERAL (
-        SELECT UNNEST(string_split(text, '')) AS ch,
-               generate_subscripts(string_split(text, ''), 1) AS pos) c
-    ),
-    wt(ch, w, blk) AS (VALUES {_char_geometry_values()}),
-    line AS (
-      SELECT c.doc_id,
-             sum(CASE WHEN c.ch = ' ' THEN {space_w}
-                      ELSE wt.w + CASE WHEN c.prev IS NOT NULL
-                                        AND c.prev != ' '
-                                       THEN {TRACKING} ELSE 0 END
-                 END) AS line_w,
-             sum(CASE WHEN c.ch = ' ' THEN 0 ELSE wt.blk END) AS blk
-      FROM chars c LEFT JOIN wt ON wt.ch = c.ch
-      GROUP BY c.doc_id
-    ),
-    geo AS (
-      SELECT d.doc_id,
-             CAST((coalesce(l.line_w, 1) + {MARGIN_LEFT + 1}) * d.s AS INT)
-               AS width,
-             CAST({CELL_HEIGHT + 2} * d.s AS INT) AS height,
-             coalesce(l.blk, 0) * d.s * d.s AS black_px
-      FROM docs d LEFT JOIN line l ON l.doc_id = d.doc_id
-    )
-    SELECT printf('m-%06d', doc_id) AS media_ref, width, height,
-           1 AS channels,
-           round(255.0 * (width * height - black_px) / (width * height), 6)
-             AS mean_luma,
-           round(black_px * 1.0 / (width * height), 6) AS black_ratio,
-           CAST(NULL AS VARCHAR) AS error
-    FROM geo
-    """
-
-
-def media_resize_dims_sql(max_docs: int = 40, out_w: int = 16, out_h: int = 16) -> str:
-    """DuckDB oracle for the resize roundtrip: the Spark query decodes,
-    nearest-neighbour-resizes, re-encodes, re-decodes and reports thumbnail
-    dims — which must equal the requested output shape for every ref."""
-    return f"""
-    SELECT printf('m-%06d', doc_id) AS media_ref,
-           {out_w} AS width, {out_h} AS height, 1 AS channels
-    FROM documents WHERE doc_id < {max_docs}
-    """
-
-
 LOREM_LINES = (
     "the quick brown fox jumps over 13 lazy dogs!",
     "pack my box with five dozen liquor jugs?",

@@ -1,10 +1,11 @@
 """Driver-contract query registry: Spark queries + DuckDB oracle SQL.
 
 Each entry is an operator analogue from SURVEY.md §2 (the OCR engine's
-relational shapes, exercised on the driver's TPC-H-ish tables) or a
-training-data pipeline operation over documents/embeddings
-(analytics/*). Spark and oracle alias every computed column identically —
-the driver's compare hashes values after sorting columns by name.
+relational shapes, exercised on the driver's TPC-H-ish tables), a
+training-data pipeline operation over the documents table (analytics/*)
+or a web main-content extraction (web/extract.py). Spark and oracle
+alias every computed column identically — the driver's compare hashes
+values after sorting columns by name.
 """
 
 from __future__ import annotations
@@ -14,13 +15,7 @@ from pyspark.sql import functions as F
 
 from .analytics import dedup as D
 from .analytics import ranking as R
-from .analytics import similarity as S
 from .analytics import textstats as T
-
-_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -339,7 +334,7 @@ GROUP BY r_name, n_name
 
 
 # ---------------------------------------------------------------------------
-# training-data pipeline ops (documents / embeddings)
+# training-data pipeline ops (documents)
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf):
@@ -545,111 +540,6 @@ def q_gopher_quality(spark, sf):  # Gopher table-A1 quality gate (non-repetition
     return T.gopher_quality(T._with_gopher_page(load(spark, sf, "documents")))
 
 
-def q_embed_neardup(spark, sf):
-    # 0.4 sits in the top ~0.05% of this corpus's pairwise-cosine tail
-    # (max ≈ 0.51) — high thresholds like 0.9 would match nothing here
-    return S.embedding_neardup_pairs(load(spark, sf, "embeddings"), threshold=0.4)
-
-
-def q_cosine_topk(spark, sf):
-    return S.cosine_topk(load(spark, sf, "embeddings"), n_queries=5, k=5)
-
-
-def q_ann_lsh(spark, sf):  # Spark-only scale path (rows-only check)
-    return S.lsh_ann_topk(load(spark, sf, "embeddings"), n_queries=5, k=5)
-
-
-def q_embed_lsh_neardup(spark, sf):  # scale path for embed_neardup
-    # (rows-only: bucketing is seed-dependent; precision 1.0 by
-    # construction — every emitted pair is exactly verified; recall floor
-    # pinned in tests/test_ann_recall.py)
-    return S.lsh_neardup_pairs(load(spark, sf, "embeddings"), threshold=0.4)
-
-
-def q_ann_ivf(spark, sf):  # Spark-only scale path (rows-only check)
-    return S.ivf_ann_topk(load(spark, sf, "embeddings"), n_queries=5, k=5)
-
-
-def q_ann_recall(spark, sf):  # rows-only: ANN quality surfaced per round
-    return S.ann_recall(load(spark, sf, "embeddings"), n_queries=5, k=5)
-
-
-def q_neardup_recall(spark, sf):  # rows-only: pairs-path quality per round
-    return S.neardup_recall(load(spark, sf, "embeddings"), threshold=0.4)
-
-
-def q_neardup_lsh_precision(spark, sf):  # ORACLE-GREEN half of the LSH
-    # pairs path: emitted-pairs ⊆ exact-pairs is a construction invariant
-    # and "the difference is empty" is exactly SQL-certifiable
-    return S.lsh_precision_violations(load(spark, sf, "embeddings"), threshold=0.4)
-
-
-def q_ann_cosine_check(spark, sf):  # ORACLE-GREEN half of the ANN paths:
-    # reported cosines must equal the exact formula on the same id pairs
-    return S.ann_cosine_violations(load(spark, sf, "embeddings"), n_queries=5, k=5)
-
-
-def q_semdedup(spark, sf):  # rows-only: k-means cells are seed-dependent
-    # (keep decisions certified separately by semdedup_check)
-    return S.semdedup(load(spark, sf, "embeddings"), threshold=0.9)
-
-
-def q_semdedup_check(spark, sf):  # ORACLE-GREEN half of semdedup: every
-    # dropped vector must be the later side of an exact cosine pair
-    return S.semdedup_violations(load(spark, sf, "embeddings"), threshold=0.9)
-
-
-def _fixture_media(spark, sf, n=40):
-    from .artifacts import get_model
-    from .fixtures import corpus_fixture_tables
-
-    _docs, media = corpus_fixture_tables(spark, sf, get_model(), max_docs=n)
-    return media
-
-
-def q_media_metadata(spark, sf):  # multimodal: real PNG decode, oracle-checked
-    # The fixture render is a pure function of (text, doc_id % 2), so the
-    # decoded geometry/luminance is SQL-expressible from documents.text and
-    # the font's per-glyph width/black-count table (fixtures.media_metadata_sql)
-    from .analytics.multimodal import image_metadata
-
-    return image_metadata(_fixture_media(spark, sf))
-
-
-def q_media_resize(spark, sf):  # multimodal: resize roundtrip, dims oracle-checked
-    # decode -> nearest-neighbour resize -> re-encode -> re-decode; the
-    # reported thumbnail dims must equal the requested output shape
-    from .analytics.multimodal import image_metadata, image_resize
-
-    thumbs = image_resize(_fixture_media(spark, sf), out_w=16, out_h=16)
-    return image_metadata(
-        thumbs.select("media_ref", F.col("thumb_png").alias("png"))
-    ).select("media_ref", "width", "height", "channels")
-
-
-def q_media_frame_sample(spark, sf):  # multimodal: REAL y4m decode + frame sample
-    # synth (mapInPandas) -> encode_y4m -> decode_y4m -> sample; the sampled
-    # frame indices, geometry, and mean luma are pure functions of the
-    # ref's md5 → SQL-expressible (multimodal.video_frame_sample_sql)
-    from .analytics.multimodal import synth_video_table, video_frame_sample
-
-    vids = synth_video_table(_fixture_media(spark, sf))
-    return video_frame_sample(vids).select(
-        "media_ref", "frame_idx", "width", "height", "mean_luma"
-    )
-
-
-def q_audio_metadata(spark, sf):  # multimodal: REAL WAV decode roundtrip
-    # synth (mapInPandas) -> encode_wav -> decode_wav; the decoded container
-    # properties are a pure function of the ref's md5 → SQL-expressible
-    from .analytics.multimodal import audio_features, synth_audio_table
-
-    wavs = synth_audio_table(_fixture_media(spark, sf))
-    return audio_features(wavs).select(
-        "media_ref", "sample_rate", "n_samples", "channels"
-    )
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -708,21 +598,6 @@ QUERIES = {
     "gopher_quality": q_gopher_quality,
     "chunk_windows": q_chunk_windows,
     "winnow_fingerprints": q_winnow_fingerprints,
-    "embed_neardup": q_embed_neardup,
-    "cosine_topk": q_cosine_topk,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "embed_lsh_neardup": q_embed_lsh_neardup,
-    "ann_recall": q_ann_recall,
-    "neardup_recall": q_neardup_recall,
-    "neardup_lsh_precision": q_neardup_lsh_precision,
-    "ann_cosine_check": q_ann_cosine_check,
-    "semdedup": q_semdedup,
-    "semdedup_check": q_semdedup_check,
-    "media_metadata": q_media_metadata,
-    "media_resize": q_media_resize,
-    "media_frame_sample": q_media_frame_sample,
-    "audio_metadata": q_audio_metadata,
 }
 
 
@@ -791,6 +666,7 @@ def _register_web_queries() -> None:
     ORACLES["pdf_extract"] = W.pdf_extract_sql()
     ORACLES["web_extract"] = W.web_extract_sql()
 
+
 ORACLES = {
     "grouped_agg": SQL_GROUPED_AGG,
     "broadcast_dim_join": SQL_BROADCAST_DIM_JOIN,
@@ -830,31 +706,7 @@ ORACLES = {
     "quality_buckets": T.quality_buckets_sql(),
     "tfidf_topterms": R.tfidf_topterms_sql(),
     "bm25_search": R.bm25_search_sql(),
-    "embed_neardup": S.embedding_neardup_sql(0.4),
-    "cosine_topk": S.cosine_topk_sql(5, 5),
-    # must-be-empty certifications: the SQL-checkable halves of the
-    # seed-dependent approximate paths (precision subset / score parity)
-    "neardup_lsh_precision": S.lsh_precision_sql(0.4),
-    "ann_cosine_check": S.ann_cosine_check_sql(),
-    "semdedup_check": S.semdedup_check_sql(),
-    # round-3 curation operators (analytics/curation.py)
-    # (registered in _register_curation_oracles below)
-    # "ann_lsh"/"ann_ivf"/"ann_recall": Spark-only (seeded hyperplanes /
-    # k-means cells; recall is measured against the exact top-k in-engine —
-    # floors asserted in tests/test_ann_recall.py)
-    # → rows-only check here; recall-vs-exact floors are asserted in
-    # tests/test_ann_recall.py
 }
-
-
-def _register_media_oracles() -> None:
-    from .analytics.multimodal import audio_metadata_sql, video_frame_sample_sql
-    from .fixtures import media_metadata_sql, media_resize_dims_sql
-
-    ORACLES["media_metadata"] = media_metadata_sql(40)
-    ORACLES["media_resize"] = media_resize_dims_sql(40, 16, 16)
-    ORACLES["audio_metadata"] = audio_metadata_sql(40)
-    ORACLES["media_frame_sample"] = video_frame_sample_sql(40)
 
 
 def _register_curation_oracles() -> None:
@@ -881,6 +733,5 @@ def _register_curation_oracles() -> None:
     ORACLES["chunk_windows"] = C.chunk_windows_sql()
 
 
-_register_media_oracles()
 _register_curation_oracles()
 _register_web_queries()

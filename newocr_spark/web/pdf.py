@@ -1,7 +1,7 @@
 """Minimal PDF writer + layout-aware text extractor (stdlib only: zlib).
 
 north_rule: "PDF/layout parse". No PDF library exists in this
-environment, so — exactly like the repo's PNG/BMP/WAV codecs — we
+environment, so — exactly like the repo's PNG/BMP codecs — we
 implement the container from the public spec (PDF 32000-1:2008):
 
 * ``make_pdf`` writes a well-formed PDF 1.4: catalog, page tree, per-page

@@ -21,9 +21,9 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 CHECKS = {
     "ocr_extract": (
-        "broadcast_meta strategy: the tiny span-metadata side broadcasts "
-        "onto media (image bytes never shuffle), MapInPandas runs on the "
-        "media table's own partitioning; final sort+window per doc",
+        "the tiny span-metadata side broadcasts onto media (image bytes "
+        "never shuffle), MapInPandas runs on the media table's own "
+        "partitioning; final sort+window per doc",
         ["MapInPandas", "BroadcastHashJoin"],
     ),
     "broadcast_dim_join": (
@@ -45,18 +45,6 @@ CHECKS = {
         "equi-joins only (band,sig) — no cross product; small sides "
         "broadcast at this sf, SMJ at scale",
         ["Join", "Exchange"],
-    ),
-    "embed_neardup": (
-        "guard-bounded broadcast (ids, matrix, norms) + one BLAS matmul "
-        "per Arrow batch in MapInPandas — no pair rows exist anywhere in "
-        "the plan (the previous BroadcastNestedLoopJoin evaluated a "
-        "per-pair interpreted dot: 56s -> 1s at sf0.1)",
-        ["MapInPandas"],
-    ),
-    "ann_ivf": (
-        "IVF probe is an equi-join on cell id; centroid assignment is a "
-        "narrow ArrowEvalPython map, no cross product",
-        ["ArrowEvalPython"],
     ),
     "html_main_text": (
         "boilerplate strip is ONE narrow MapInPandas over the pruned "
@@ -138,20 +126,6 @@ CHECKS = {
         ["CartesianProduct", "BroadcastNestedLoopJoin", "ArrowEvalPython",
          "BatchEvalPython"],
     ),
-    "ann_lsh": (
-        "multiprobe explodes probe buckets on the QUERY side only "
-        "(Generate); candidates come from an equi-join on (table, bucket) "
-        "— no cross product anywhere",
-        ["Generate", "ArrowEvalPython"],
-        ["CartesianProduct"],
-    ),
-    "embed_lsh_neardup": (
-        "pairs scale path: (table, bucket) equi-self-join for candidates, "
-        "id-only dedup, vectors rejoin only for the exact verify — no "
-        "cross product, no corpus broadcast kernel",
-        ["ArrowEvalPython", "Join"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-    ),
     "pack_bucketed": (
         "no-split layout: same ONE shuffle by shard as the contiguous "
         "mode plus per-(shard, length) row_number and a prefix-sum over "
@@ -163,13 +137,6 @@ CHECKS = {
         "scorecard over both layouts: per-shard max + global sums are "
         "partial hash-aggregates; the mode rows union",
         ["HashAggregate", "Union"],
-    ),
-    "neardup_lsh_precision": (
-        "certification anti-join: LSH pairs minus exact pairs on id "
-        "columns only — both kernels stay Arrow-batched, no cross "
-        "product, no pair-row blowup outside the bounded kernels",
-        ["Join"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
     ),
     "url_canonical": (
         "URL canonicalization is one narrow in-codegen projection — "
@@ -434,23 +401,6 @@ CHECKS = {
         "chunk rows — no shuffle, no Python, no window function",
         ["Generate", "Project"],
         ["Exchange", "Window", "BatchEvalPython", "ArrowEvalPython"],
-    ),
-    "semdedup": (
-        "cell assignment is one narrow Arrow map against broadcast "
-        "k-means centroids (trained on a bounded driver-side sample); "
-        "the within-cell verify is one applyInPandas group per cell "
-        "streaming row-blocked BLAS — pair rows never exist in the plan; "
-        "exact-dup collapse (hash-agg on the vector bytes) bounds hot "
-        "cells before any quadratic work",
-        ["ArrowEvalPython", "FlatMapGroupsInPandas", "HashAggregate"],
-        ["CartesianProduct"],
-    ),
-    "ann_cosine_check": (
-        "score certification: ANN outputs rejoin embeddings (query side "
-        "broadcast) and recompute the cosine in-plan; the two method "
-        "branches union — no cross product",
-        ["BroadcastHashJoin", "Union"],
-        ["CartesianProduct"],
     ),
 }
 

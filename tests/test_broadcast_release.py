@@ -1,28 +1,12 @@
-"""The EAGER operators (ngram bitmap, embedding near-dup, LSH/IVF ANN)
-create SparkContext broadcasts at DataFrame-construction time that live
-until context GC — a long-lived session looping over them accumulates
-pinned executor memory. `release_broadcasts` frees them deterministically
-(VERDICT r3 #8)."""
+"""`release_broadcasts` frees the SparkContext broadcasts that the eager
+n-gram bitmap operator creates at DataFrame-construction time, instead of
+leaving them pinned until context GC (VERDICT r3 #8)."""
 
 import pytest
 
 from newocr_spark.analytics.dedup import ngram_jaccard_pairs, release_broadcasts
-from newocr_spark.analytics.similarity import embedding_neardup_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_no_broadcast_leak_across_iterations(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    for _ in range(10):
-        df = embedding_neardup_pairs(emb, threshold=0.4)
-        assert df.count() >= 0
-        released = release_broadcasts(df)
-        assert released == 1  # the (ids, matrix, norms) triple
-        assert release_broadcasts(df) == 0  # idempotent
-    # a destroyed broadcast is actually gone: re-executing the frame fails
-    with pytest.raises(Exception):
-        df.count()
 
 
 def test_ngram_bitmap_broadcasts_released(spark):

@@ -2,7 +2,9 @@
 graph (`analytics/dedup.dup_clusters`). The chain cases exercise
 multi-round label propagation, which the near-clique LSH fixtures never
 force; the contract test (`test_driver_contract.py::dedup_clusters`)
-covers the end-to-end oracle parity."""
+covers the end-to-end oracle parity.
+
+Also pins the n-gram Jaccard bitmap strategy's vocab cap."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -128,3 +130,27 @@ def test_keep_best_in_cluster_argmax_quality_not_min_id(spark):
     # quality ordering that drove the choice: clean copies strictly above
     assert by_id[12].quality_score > by_id[10].quality_score
     assert by_id[12].quality_score == by_id[14].quality_score  # tie -> min id
+
+
+def test_forced_bitmap_respects_vocab_cap(spark, monkeypatch):
+    """A forced strategy='bitmap' must hit the same MAX_BITMAP_VOCAB bound
+    that 'auto' probes: past the cap it raises and names the join
+    strategy instead of collecting the whole vocab onto the driver, while
+    'auto' falls back to the join pairs."""
+    from newocr_spark.analytics import dedup
+
+    docs = spark.createDataFrame(
+        [
+            (0, "alpha beta gamma delta epsilon zeta"),
+            (1, "alpha beta gamma delta epsilon eta"),
+            (2, "one two three four five six"),
+        ],
+        "doc_id long, text string",
+    )
+    monkeypatch.setattr(dedup, "MAX_BITMAP_VOCAB", 4)
+    with pytest.raises(ValueError, match="strategy='join'"):
+        dedup.ngram_jaccard_pairs(docs, threshold=0.5, strategy="bitmap")
+    auto = dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    join = dedup.ngram_jaccard_pairs(docs, threshold=0.5, strategy="join").collect()
+    assert sorted(auto) == sorted(join)
+    assert [(r.doc_a, r.doc_b) for r in join] == [(0, 1)]

@@ -112,38 +112,6 @@ def test_max_bucket_size_sidelines_but_keeps_exact_pairs(spark):
     assert got == {(0, 1), (10, 11)}
 
 
-def test_embedding_lsh_collapses_exact_vectors(spark):
-    """The embedding mirror: bit-identical vectors collapse to one rep
-    before bucketing; member pairs re-expand with cosine 1.0 within a
-    copy group and the reps' verified cosine across groups."""
-    import numpy as np
-
-    from newocr_spark.analytics.similarity import lsh_neardup_pairs
-
-    rng = np.random.RandomState(7)
-    base = rng.standard_normal(16).astype(np.float32)
-    near = (base + 0.05 * rng.standard_normal(16).astype(np.float32)).astype(
-        np.float32
-    )
-    far = rng.standard_normal(16).astype(np.float32)
-    rows = (
-        [(i, [float(x) for x in base]) for i in range(50)]  # 50 copies
-        + [(100, [float(x) for x in near])]
-        + [(200, [float(x) for x in far])]
-    )
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = lsh_neardup_pairs(emb, threshold=0.9, n_planes=2, n_tables=8)
-    got = pairs.collect()
-    within = [r for r in got if r.vec_a < 50 and r.vec_b < 50]
-    cross = [r for r in got if r.vec_b == 100]
-    assert len(within) == 50 * 49 // 2
-    assert all(r.cosine == 1.0 for r in within)
-    # every copy pairs with the near vector at the SAME verified cosine
-    assert len(cross) == 50
-    assert len({r.cosine for r in cross}) == 1 and cross[0].cosine >= 0.9
-    assert not any(r.vec_b == 200 for r in got)  # far vector stays out
-
-
 def test_sub_shingle_copies_never_pair(spark):
     """Exact copies shorter than the shingle width have no signature in
     the uncollapsed plan and must not pair after the collapse either."""

@@ -319,8 +319,8 @@ def test_tall_multiline_cross_line_windows(tall_model, tallserif_model):
 
     # note: no ' !' pairs with a narrow left glyph — the '!'-floor space
     # quirk (OCRScan.java:217, kernel/spacing.py) drops that space on
-    # EVERY face, base included; that quirk is covered by the lag_arith
-    # analogue, not here.
+    # EVERY face, base included; that quirk is pinned by
+    # test_property.py::test_space_before_bang_floor_reference_quirk, not here.
     lines = ['i. j! l:', '| i j |', 'x= y? "q"']
     for face, model in ((tall_face(), tall_model),
                         (tall_serif_face(), tallserif_model)):
