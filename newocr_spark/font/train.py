@@ -50,7 +50,7 @@ def _letters_during_training(grid: np.ndarray, config: FontConfig) -> list[tuple
     out = []
     for from_y, to_y in bounds:
         sub = grid[from_y:to_y, :]
-        found = connected_components(sub)
+        found = list(connected_components(sub))
         for c in found:
             c.y += from_y  # SearchCharacter(coords, 0, fromY) offset
             c.extras["modifier"] = 0

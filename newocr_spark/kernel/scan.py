@@ -1,8 +1,12 @@
 """Full recognition kernel: bool grid → recognized text lines.
 
-This is the UDF-local core (SURVEY §3.1 steps 3-10) — pure numpy + small
-Python over per-image glyph lists, exactly the granularity at which the
-reference is imperative. Pipeline:
+This is the UDF-local core (SURVEY §3.1 steps 3-10). Up to the NN rank
+it works on whole-image arrays: components come back columnar (bbox
+arrays plus one grid stack per glyph shape), are featurized one shape
+stack at a time and ranked in one matrix expression. ``ImageLetter``
+objects are built only at line assignment — from there on (mergence,
+spacing) the code is small Python per letter, the granularity at which
+the reference is imperative. Pipeline:
 
   line_bounds (G1) → connected_components (G2/G3) → featurize (G5)
   → line assignment, consume-on-match (J2/X1, OCRScan.java:142-166)
@@ -12,9 +16,10 @@ reference is imperative. Pipeline:
 
 The NN hot loop is one (n_glyphs, N_trained) matrix expression instead of
 the reference's per-character hash-map loop (OCRActions.java:199-210), and
-glyph bitmaps memoize their candidate ranking in a worker-local LRU (a
-font glyph cache: identical bitmaps recur constantly in rendered corpora,
-and the ranking is a pure function of bitmap + broadcast model).
+glyph bitmaps memoize their candidate ranking in a worker-local LRU
+bounded in bytes (a font glyph cache: identical bitmaps recur constantly
+in rendered corpora, and the ranking is a pure function of bitmap +
+broadcast model).
 
 Deterministic deviation (documented): the reference sorts NN candidates
 with equal scores in hash-map iteration order and runs merge rules over
@@ -31,8 +36,8 @@ from collections import OrderedDict
 import numpy as np
 
 from ..model import FontModel
-from .ccl import connected_components
-from .features import featurize, featurize_many
+from .ccl import Glyphs, connected_components
+from .features import featurize_many
 from .grid import binarize, rows_populated
 from .lines import line_bounds
 from .mergence import run_mergence
@@ -119,10 +124,33 @@ class ImageLetter:
         return f"<{self.letter!r}/{self.mod} @({self.x},{self.y}) {self.width}x{self.height}>"
 
 
-# worker-local glyph cache: (model id, glyph shape+bytes) → candidate order.
-# ~220 B/entry; capped LRU so long-running executors stay bounded.
-_CAND_CACHE: OrderedDict = OrderedDict()
-_CAND_CACHE_MAX = 200_000
+class _GlyphCache(OrderedDict):
+    """LRU of glyph key → candidate order. ``nbytes`` counts each entry's
+    packed key bitmap plus its order array; inserting past
+    ``_CAND_CACHE_BYTES`` evicts the least recently used entries."""
+
+    nbytes = 0
+
+    def put(self, key: tuple, order: np.ndarray) -> None:
+        old = self.pop(key, None)
+        if old is not None:
+            self.nbytes -= len(key[2]) + old.nbytes
+        self[key] = order
+        self.nbytes += len(key[2]) + order.nbytes
+        while self.nbytes > _CAND_CACHE_BYTES:
+            k, v = self.popitem(last=False)
+            self.nbytes -= len(k[2]) + v.nbytes
+
+    def clear(self) -> None:
+        super().clear()
+        self.nbytes = 0
+
+
+# worker-local glyph cache: (model id, glyph shape, packed bitmap) →
+# candidate order. A scale-4 glyph costs ~350 B (a ~140 B packed key and a
+# 2 B-per-model-row order), so the budget holds ~100k glyphs per worker.
+_CAND_CACHE_BYTES = 32 << 20
+_CAND_CACHE = _GlyphCache()
 
 
 def _rank_candidates(model: FontModel, feats: np.ndarray, ratios: np.ndarray) -> np.ndarray:
@@ -131,30 +159,35 @@ def _rank_candidates(model: FontModel, feats: np.ndarray, ratios: np.ndarray) ->
     score = sum((g - t)^2 over 17 segments)            (OCRUtils.java:90-99)
           + weight(letter) * (trained_ratio - glyph_ratio)^2
                                                        (OCRActions.java:248-258)
-    Ties break by (letter, modifier) for determinism.
+    Ties break by (letter, modifier) for determinism: the model rows are
+    permuted into that order once, and one stable sort by score keeps it
+    among equal scores.
     """
     T = model.segments
     seg_d = ((feats[:, None, :] - T[None, :, :]) ** 2).sum(axis=-1)
     tr = np.nan_to_num(model.trained_ratios, nan=0.0)
     scores = seg_d + model.ratio_weights[None, :] * (tr[None, :] - ratios[:, None]) ** 2
-    n = len(model.letters)
     letter_codes = np.array([ord(lm[0]) for lm in model.letters])
     mods = np.array([lm[1] for lm in model.letters])
-    orders = np.empty((len(feats), n), dtype=np.int16)
-    for i in range(len(feats)):
-        orders[i] = np.lexsort((mods, letter_codes, scores[i])).astype(np.int16)
-    return orders
+    tie_order = np.lexsort((mods, letter_codes))
+    ranked = np.argsort(scores[:, tie_order], axis=1, kind="stable")
+    return tie_order[ranked].astype(np.int16)
 
 
-def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
-    """Candidate order per component, via the worker-local glyph cache."""
-    keys = []
-    miss_idx = []
-    out: list = [None] * len(comps)
+def _candidates_for(glyphs: Glyphs, model: FontModel) -> list[np.ndarray]:
+    """Candidate order per glyph, via the worker-local glyph cache."""
     mid = id(model.segments)
-    for i, c in enumerate(comps):
-        key = (mid, c.grid.shape, c.grid.tobytes())
-        keys.append(key)
+    keys: list = [None] * len(glyphs)
+    for idx, stack in glyphs.stacks:
+        shape = stack.shape[1:]
+        packed = np.packbits(stack.reshape(len(idx), -1), axis=1)
+        size = packed.shape[1]
+        flat = packed.tobytes()
+        for j, i in enumerate(idx.tolist()):
+            keys[i] = (mid, shape, flat[j * size : (j + 1) * size])
+    out: list = [None] * len(glyphs)
+    miss_idx = []
+    for i, key in enumerate(keys):
         hit = _CAND_CACHE.get(key)
         if hit is not None:
             _CAND_CACHE.move_to_end(key)
@@ -162,16 +195,13 @@ def _candidates_for(comps, model: FontModel) -> list[np.ndarray]:
         else:
             miss_idx.append(i)
     if miss_idx:
-        feats = featurize_many([comps[i].grid for i in miss_idx])
-        ratios = np.array(
-            [comps[i].width / comps[i].height for i in miss_idx], dtype=np.float64
-        )
+        feats = featurize_many([glyphs.grid(i) for i in miss_idx])
+        ratios = glyphs.width[miss_idx] / glyphs.height[miss_idx]
         orders = _rank_candidates(model, feats, ratios)
-        for j, i in enumerate(miss_idx):
-            out[i] = orders[j]
-            _CAND_CACHE[keys[i]] = orders[j]
-        while len(_CAND_CACHE) > _CAND_CACHE_MAX:
-            _CAND_CACHE.popitem(last=False)
+        for i, order in zip(miss_idx, orders):
+            order = order.copy()  # a row of its own, not a view pinning the batch
+            out[i] = order
+            _CAND_CACHE.put(keys[i], order)
     return out
 
 
@@ -182,8 +212,8 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
         rows_populated(grid), model.config.max_percent_diff_to_merge
     )
     # G2/G3/G5 — components in discovery order, featurized + ranked
-    comps = connected_components(grid)
-    cands = _candidates_for(comps, model)
+    glyphs = connected_components(grid)
+    cands = _candidates_for(glyphs, model)
 
     # J2 — line assignment: lines sorted by rounded center; each remaining
     # glyph whose vertical center falls in-bounds is consumed in discovery
@@ -193,32 +223,31 @@ def scan_grid(grid: np.ndarray, model: FontModel) -> list[tuple[int, list[ImageL
          for top, bottom in bounds),
         key=lambda e: e[2],
     )
-    remaining = list(range(len(comps)))
+    centers = glyphs.y + glyphs.height / 2.0
+    free = np.ones(len(glyphs), dtype=bool)
+    xs, ys = glyphs.x.tolist(), glyphs.y.tolist()
+    widths, heights = glyphs.width.tolist(), glyphs.height.tolist()
     sorted_lines: list[tuple[int, list[ImageLetter]]] = []
     for top, bottom, center_y in line_entries:
+        inside = free & (top <= centers) & (centers <= bottom)
+        if not inside.any():
+            continue
+        free &= ~inside
         matched: list[ImageLetter] = []
-        still: list[int] = []
-        for ci in remaining:
-            c = comps[ci]
-            center = c.y + c.height / 2.0
-            if not (top <= center <= bottom):
-                still.append(ci)
-                continue
+        for ci in np.flatnonzero(inside).tolist():
             order = cands[ci]
             head = int(order[0])
             letter, mod = model.letters[head]
+            x, y, w, h = xs[ci], ys[ci], widths[ci], heights[ci]
             il = ImageLetter(
-                letter, mod, c.x, c.y, c.width, c.height,
+                letter, mod, x, y, w, h,
                 float(model.avg_width[head]), float(model.avg_height[head]),
-                c.width / c.height,
+                w / h,
                 float(model.min_center[head]), float(model.max_center[head]),
             )
-            il.center_offset = center - c.y
+            il.center_offset = (y + h / 2.0) - y
             il.attach_candidates(order, model)
             matched.append(il)
-        remaining = still
-        if not matched:
-            continue
         matched.sort(key=lambda l: l.x)
         sorted_lines.append((center_y, matched))
 
@@ -250,7 +279,4 @@ def scan_image_bytes(png: bytes, model: FontModel) -> str:
     return render_text(scan_grid(binarize(decode_png(png)), model))
 
 
-__all__ = [
-    "ImageLetter", "scan_grid", "render_text", "scan_image_bytes",
-    "featurize",  # re-export for kernel consumers
-]
+__all__ = ["ImageLetter", "scan_grid", "render_text", "scan_image_bytes"]
